@@ -1,6 +1,19 @@
 package graft
 import org.apache.spark.sql.SparkSession
 object Bench {
+  /** SPARK_GRAFT_EXTRA_CONF's "k=v;k2=v2" list as (key, value) pairs,
+    * trimmed. `;` separates entries, so a value may not contain `;`;
+    * empty entries are skipped and an entry without `=` is rejected,
+    * naming it. */
+  private[graft] def parseExtraConf(spec: String): Seq[(String, String)] =
+    spec.split(";").toSeq.map(_.trim).filter(_.nonEmpty).map { kv =>
+      require(kv.contains("="),
+        s"SPARK_GRAFT_EXTRA_CONF entry '$kv' has no '=' (entries are k=v, separated " +
+          "by ';', so a value may not contain ';')")
+      val Array(k, v) = kv.split("=", 2)
+      k.trim -> v.trim
+    }
+
   def main(args: Array[String]): Unit = {
     // Heap guard: the recorded baseline assumes the pinned 8 GiB forked
     // heap (build.sbt). EITHER direction off that regime invalidates
@@ -40,14 +53,11 @@ object Bench {
       // whatever the cluster width. Override via SPARK_GRAFT_EXTRA_CONF.
       .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
       .config("spark.kryo.classesToRegister", GraftKryo.classes)
-    // Ad-hoc conf overrides ("k=v;k2=v2") for A/B experiments and for
-    // cluster-scale parameterization without editing this file; the
-    // driver's canonical bench leaves it unset.
-    sys.env.get("SPARK_GRAFT_EXTRA_CONF").foreach {
-      _.split(";").filter(_.contains("=")).foreach { kv =>
-        val Array(k, v) = kv.split("=", 2)
-        builder0.config(k.trim, v.trim)
-      }
+    // Ad-hoc conf overrides for A/B experiments and for cluster-scale
+    // parameterization without editing this file; the canonical bench
+    // leaves it unset.
+    sys.env.get("SPARK_GRAFT_EXTRA_CONF").foreach { spec =>
+      parseExtraConf(spec).foreach { case (k, v) => builder0.config(k, v) }
     }
     if (master.startsWith("local-cluster"))
       builder0.config("spark.executor.extraClassPath",

@@ -138,20 +138,25 @@ object TabularBridge {
     // buffer (a single UnsafeArrayData row per chunk, bounded by the
     // ~2 GB BufferHolder limit). That is safe — and cheap relative to a
     // sort-based assembly — exactly because chunks are bounded: the
-    // reference's own contract caps a chunk at 2 GB of payload, and our
-    // cell struct is <= 8 bytes flat index + 8 bytes per variable, so a
-    // conforming chunk's buffer stays well under the row limit. Guard it
+    // reference's own contract caps a chunk at 2 GB of payload. Guard it
     // explicitly so an oversized chunk spec fails at PLAN time with a
-    // real message instead of a mid-shuffle buffer-growth error.
+    // real message instead of a mid-shuffle buffer-growth error. The
+    // guard is stricter than the runtime limit: each cell is charged
+    // 16 B per struct field (flat index + one per variable; the real
+    // UnsafeRow needs 8 B plus an 8 B null word shared by the row) plus
+    // its 8 B element offset, and the whole product is overflow-checked.
     locally {
-      val cells = dims.map { case (d, size) =>
-        math.min(normalized(d).toLong, size) }.product
-      val bytesPerCell = 8L * (1 + vars.length)
-      require(cells * bytesPerCell <= (1L << 31) - 16,
-        s"fromDataFrame chunk ${normalized} holds $cells cells x " +
-          s"$bytesPerCell B = ${cells * bytesPerCell} B per assembly " +
-          "buffer — beyond the 2 GB single-row aggregation limit (and the " +
-          "2 GB chunk contract); use smaller chunks")
+      val bytesPerCell = 8L + 16L * (1 + vars.length)
+      val bytes =
+        try dims.foldLeft(bytesPerCell) { case (acc, (d, size)) =>
+          math.multiplyExact(acc, math.min(normalized(d).toLong, size)) }
+        catch { case _: ArithmeticException => Long.MaxValue }
+      require(bytes <= (1L << 31) - 16,
+        s"fromDataFrame chunk ${normalized} needs " +
+          s"${if (bytes == Long.MaxValue) "over 2^63" else bytes} B " +
+          s"($bytesPerCell B per cell) per assembly buffer — beyond the 2 GB " +
+          "single-row aggregation limit (and the 2 GB chunk contract); " +
+          "use smaller chunks")
     }
     val grouped = df.select(
         expr(chunkIdxSql).as("__ck"),

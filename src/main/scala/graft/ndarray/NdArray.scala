@@ -1,6 +1,7 @@
 package graft.ndarray
 
-import java.nio.{ByteBuffer, ByteOrder}
+import java.lang.invoke.MethodHandles
+import java.nio.ByteOrder
 
 /** Element dtype of an [[NdArray]]. Encodes the Zarr v2 dtype string and
   * the itemsize. `TimeNs` is datetime64[ns] stored as little-endian i64
@@ -39,6 +40,13 @@ object DType {
   *
   * Float reads/writes go through a Double view, integer ones through a
   * Long view; conversions are exact for every value the engine handles.
+  *
+  * Access rule: elements are read and written through the companion's
+  * typed VarHandles, called with a type ascription (or through one
+  * ByteBuffer hoisted per call), never through per-element dtype
+  * dispatch inside a kernel loop — a loop dispatches once per call or
+  * per run, through `readDoubles`/`writeDoubles` and the row-wise
+  * reduction walk (`NdArray.RowWalk`).
   */
 final case class NdArray(dtype: DType, shape: Array[Int], data: Array[Byte])
     extends Serializable {
@@ -50,7 +58,7 @@ final case class NdArray(dtype: DType, shape: Array[Int], data: Array[Byte])
   require(nbytes == data.length,
     s"data length ${data.length} != shape ${shape.mkString("x")} * ${dtype.itemsize}")
 
-  private def buf: ByteBuffer = ByteBuffer.wrap(data).order(ByteOrder.LITTLE_ENDIAN)
+  import NdArray.{F32V, F64V, I16V, I32V, I64V}
 
   /** C-order strides in elements. */
   def strides: Array[Long] = {
@@ -62,47 +70,84 @@ final case class NdArray(dtype: DType, shape: Array[Int], data: Array[Byte])
   }
 
   def getDouble(flat: Long): Double = dtype match {
-    case DType.F32 => buf.getFloat((flat * 4).toInt).toDouble
-    case DType.F64 => buf.getDouble((flat * 8).toInt)
-    case DType.I32 => buf.getInt((flat * 4).toInt).toDouble
-    case DType.I64 | DType.TimeNs => buf.getLong((flat * 8).toInt).toDouble
-    case DType.I16 => buf.getShort((flat * 2).toInt).toDouble
+    case DType.F32 => (F32V.get(data, flat.toInt << 2): Float).toDouble
+    case DType.F64 => (F64V.get(data, flat.toInt << 3): Double)
+    case DType.I32 => (I32V.get(data, flat.toInt << 2): Int).toDouble
+    case DType.I64 | DType.TimeNs => (I64V.get(data, flat.toInt << 3): Long).toDouble
+    case DType.I16 => (I16V.get(data, flat.toInt << 1): Short).toDouble
     case DType.I8 => data(flat.toInt).toDouble
     case DType.U8 => (data(flat.toInt) & 0xff).toDouble
     case DType.Bool => if (data(flat.toInt) != 0) 1.0 else 0.0
   }
 
   def getLong(flat: Long): Long = dtype match {
-    case DType.F32 => buf.getFloat((flat * 4).toInt).toLong
-    case DType.F64 => buf.getDouble((flat * 8).toInt).toLong
-    case DType.I32 => buf.getInt((flat * 4).toInt).toLong
-    case DType.I64 | DType.TimeNs => buf.getLong((flat * 8).toInt)
-    case DType.I16 => buf.getShort((flat * 2).toInt).toLong
+    case DType.F32 => (F32V.get(data, flat.toInt << 2): Float).toLong
+    case DType.F64 => (F64V.get(data, flat.toInt << 3): Double).toLong
+    case DType.I32 => (I32V.get(data, flat.toInt << 2): Int).toLong
+    case DType.I64 | DType.TimeNs => (I64V.get(data, flat.toInt << 3): Long)
+    case DType.I16 => (I16V.get(data, flat.toInt << 1): Short).toLong
     case DType.I8 => data(flat.toInt).toLong
     case DType.U8 => (data(flat.toInt) & 0xff).toLong
     case DType.Bool => if (data(flat.toInt) != 0) 1L else 0L
   }
 
   def setDouble(flat: Long, v: Double): Unit = dtype match {
-    case DType.F32 => buf.putFloat((flat * 4).toInt, v.toFloat)
-    case DType.F64 => buf.putDouble((flat * 8).toInt, v)
-    case DType.I32 => buf.putInt((flat * 4).toInt, v.toInt)
-    case DType.I64 | DType.TimeNs => buf.putLong((flat * 8).toInt, v.toLong)
-    case DType.I16 => buf.putShort((flat * 2).toInt, v.toShort)
+    case DType.F32 => F32V.set(data, flat.toInt << 2, v.toFloat)
+    case DType.F64 => F64V.set(data, flat.toInt << 3, v)
+    case DType.I32 => I32V.set(data, flat.toInt << 2, v.toInt)
+    case DType.I64 | DType.TimeNs => I64V.set(data, flat.toInt << 3, v.toLong)
+    case DType.I16 => I16V.set(data, flat.toInt << 1, v.toShort)
     case DType.I8 => data(flat.toInt) = v.toByte
     case DType.U8 => data(flat.toInt) = (v.toLong & 0xff).toByte
     case DType.Bool => data(flat.toInt) = if (v != 0.0) 1 else 0
   }
 
   def setLong(flat: Long, v: Long): Unit = dtype match {
-    case DType.F32 => buf.putFloat((flat * 4).toInt, v.toFloat)
-    case DType.F64 => buf.putDouble((flat * 8).toInt, v.toDouble)
-    case DType.I32 => buf.putInt((flat * 4).toInt, v.toInt)
-    case DType.I64 | DType.TimeNs => buf.putLong((flat * 8).toInt, v)
-    case DType.I16 => buf.putShort((flat * 2).toInt, v.toShort)
+    case DType.F32 => F32V.set(data, flat.toInt << 2, v.toFloat)
+    case DType.F64 => F64V.set(data, flat.toInt << 3, v.toDouble)
+    case DType.I32 => I32V.set(data, flat.toInt << 2, v.toInt)
+    case DType.I64 | DType.TimeNs => I64V.set(data, flat.toInt << 3, v)
+    case DType.I16 => I16V.set(data, flat.toInt << 1, v.toShort)
     case DType.I8 => data(flat.toInt) = v.toByte
     case DType.U8 => data(flat.toInt) = (v & 0xff).toByte
     case DType.Bool => data(flat.toInt) = if (v != 0L) 1 else 0
+  }
+
+  /** Elements [from, from + n) as float64 into dst(0 until n): one
+    * dtype dispatch per call, typed reads inside. */
+  private[ndarray] def readDoubles(from: Int, n: Int, dst: Array[Double]): Unit = {
+    var j = 0
+    dtype match {
+      case DType.F32 =>
+        while (j < n) { dst(j) = (F32V.get(data, (from + j) << 2): Float).toDouble; j += 1 }
+      case DType.F64 =>
+        while (j < n) { dst(j) = (F64V.get(data, (from + j) << 3): Double); j += 1 }
+      case DType.I32 =>
+        while (j < n) { dst(j) = (I32V.get(data, (from + j) << 2): Int).toDouble; j += 1 }
+      case DType.I64 | DType.TimeNs =>
+        while (j < n) { dst(j) = (I64V.get(data, (from + j) << 3): Long).toDouble; j += 1 }
+      case DType.I16 =>
+        while (j < n) { dst(j) = (I16V.get(data, (from + j) << 1): Short).toDouble; j += 1 }
+      case DType.I8 => while (j < n) { dst(j) = data(from + j).toDouble; j += 1 }
+      case DType.U8 => while (j < n) { dst(j) = (data(from + j) & 0xff).toDouble; j += 1 }
+      case DType.Bool => while (j < n) { dst(j) = if (data(from + j) != 0) 1.0 else 0.0; j += 1 }
+    }
+  }
+
+  /** setDouble over elements [from, from + n) from src(0 until n). */
+  private[ndarray] def writeDoubles(from: Int, n: Int, src: Array[Double]): Unit = {
+    var j = 0
+    dtype match {
+      case DType.F32 => while (j < n) { F32V.set(data, (from + j) << 2, src(j).toFloat); j += 1 }
+      case DType.F64 => while (j < n) { F64V.set(data, (from + j) << 3, src(j)); j += 1 }
+      case DType.I32 => while (j < n) { I32V.set(data, (from + j) << 2, src(j).toInt); j += 1 }
+      case DType.I64 | DType.TimeNs =>
+        while (j < n) { I64V.set(data, (from + j) << 3, src(j).toLong); j += 1 }
+      case DType.I16 => while (j < n) { I16V.set(data, (from + j) << 1, src(j).toShort); j += 1 }
+      case DType.I8 => while (j < n) { data(from + j) = src(j).toByte; j += 1 }
+      case DType.U8 => while (j < n) { data(from + j) = (src(j).toLong & 0xff).toByte; j += 1 }
+      case DType.Bool => while (j < n) { data(from + j) = if (src(j) != 0.0) 1 else 0; j += 1 }
+    }
   }
 
   /** Extract the hyper-rectangle [starts(d), starts(d)+outShape(d)) per dim. */
@@ -202,49 +247,37 @@ final case class NdArray(dtype: DType, shape: Array[Int], data: Array[Byte])
 
   /** Raw element bits as long (for exact moves regardless of dtype). */
   private def getLongBits(flat: Long): Long = dtype.itemsize match {
-    case 1 => buf.get(flat.toInt).toLong
-    case 2 => buf.getShort((flat * 2).toInt).toLong
-    case 4 => buf.getInt((flat * 4).toInt).toLong
-    case 8 => buf.getLong((flat * 8).toInt)
+    case 1 => data(flat.toInt).toLong
+    case 2 => (I16V.get(data, flat.toInt << 1): Short).toLong
+    case 4 => (I32V.get(data, flat.toInt << 2): Int).toLong
+    case 8 => (I64V.get(data, flat.toInt << 3): Long)
   }
   private[ndarray] def setLongBits(flat: Long, bits: Long): Unit = dtype.itemsize match {
-    case 1 => buf.put(flat.toInt, bits.toByte)
-    case 2 => buf.putShort((flat * 2).toInt, bits.toShort)
-    case 4 => buf.putInt((flat * 4).toInt, bits.toInt)
-    case 8 => buf.putLong((flat * 8).toInt, bits)
+    case 1 => data(flat.toInt) = bits.toByte
+    case 2 => I16V.set(data, flat.toInt << 1, bits.toShort)
+    case 4 => I32V.set(data, flat.toInt << 2, bits.toInt)
+    case 8 => I64V.set(data, flat.toInt << 3, bits)
   }
 
   /** Sum + not-NaN count along the given axes (ascending order), in
     * float64 — the per-chunk partial aggregate of the reference's Mean
     * (combiners.py:38-64). skipna treats NaN as (0, not counted). */
   def sumCount(axes: Array[Int], skipna: Boolean): (NdArray, NdArray) = {
-    val keep = Array.range(0, ndim).filterNot(axes.contains)
-    val outShape = keep.map(shape)
-    val sums = NdArray.zeros(DType.F64, outShape)
-    val counts = NdArray.zeros(DType.F64, outShape)
-    val srcStrides = strides
-    val outStrides = sums.strides
-    val n = size
-    val idx = new Array[Int](ndim)
-    var flat = 0L
-    while (flat < n) {
-      var outFlat = 0L
-      var k = 0
-      while (k < keep.length) { outFlat += idx(keep(k)) * outStrides(k); k += 1 }
-      val v = getDouble(flat)
-      if (!skipna || !v.isNaN) {
-        sums.setDouble(outFlat, sums.getDouble(outFlat) + v)
-        counts.setDouble(outFlat, counts.getDouble(outFlat) + 1.0)
+    val w = new NdArray.RowWalk(this, axes)
+    val sums = new Array[Double](w.outSize)
+    val counts = new Array[Double](w.outSize)
+    while (w.next()) {
+      val v = w.v
+      var o = w.out
+      var j = 0
+      while (j < w.n) {
+        val x = v(j)
+        if (!skipna || !x.isNaN) { sums(o) += x; counts(o) += 1.0 }
+        o += w.step
+        j += 1
       }
-      var d = ndim - 1
-      var carry = true
-      while (d >= 0 && carry) {
-        idx(d) += 1
-        if (idx(d) == shape(d)) { idx(d) = 0; d -= 1 } else carry = false
-      }
-      flat += 1
     }
-    (sums, counts)
+    (w.result(sums), w.result(counts))
   }
 
   /** Product along the given axes, in float64 — the per-chunk partial
@@ -252,28 +285,20 @@ final case class NdArray(dtype: DType, shape: Array[Int], data: Array[Byte])
     * elements are skipped; an all-NaN (or empty) cell yields 1, the
     * multiplicative identity, as numpy's nanprod does. */
   def prodAlong(axes: Array[Int], skipna: Boolean): NdArray = {
-    val keep = Array.range(0, ndim).filterNot(axes.contains)
-    val out = NdArray.fill(DType.F64, keep.map(shape), 1.0)
-    val outStrides = out.strides
-    val n = size
-    val idx = new Array[Int](ndim)
-    var flat = 0L
-    while (flat < n) {
-      var outFlat = 0L
-      var k = 0
-      while (k < keep.length) { outFlat += idx(keep(k)) * outStrides(k); k += 1 }
-      val v = getDouble(flat)
-      if (!skipna || !v.isNaN)
-        out.setDouble(outFlat, out.getDouble(outFlat) * v)
-      var d = ndim - 1
-      var carry = true
-      while (d >= 0 && carry) {
-        idx(d) += 1
-        if (idx(d) == shape(d)) { idx(d) = 0; d -= 1 } else carry = false
+    val w = new NdArray.RowWalk(this, axes)
+    val prods = Array.fill(w.outSize)(1.0)
+    while (w.next()) {
+      val v = w.v
+      var o = w.out
+      var j = 0
+      while (j < w.n) {
+        val x = v(j)
+        if (!skipna || !x.isNaN) prods(o) *= x
+        o += w.step
+        j += 1
       }
-      flat += 1
     }
-    out
+    w.result(prods)
   }
 
   /** Weighted sum + weight total along the given axes, in float64 —
@@ -285,43 +310,7 @@ final case class NdArray(dtype: DType, shape: Array[Int], data: Array[Byte])
     * semantics. */
   def weightedSumCount(axes: Array[Int], axisWeights: Array[Array[Double]],
                        skipna: Boolean): (NdArray, NdArray) = {
-    require(axisWeights.length == axes.length,
-      s"need one weight array (or null) per reduced axis")
-    axes.zip(axisWeights).foreach { case (ax, w) =>
-      require(w == null || w.length == shape(ax),
-        s"weights for axis $ax have length ${w.length}, extent is ${shape(ax)}")
-    }
-    val keep = Array.range(0, ndim).filterNot(axes.contains)
-    val outShape = keep.map(shape)
-    val sums = NdArray.zeros(DType.F64, outShape)
-    val wsums = NdArray.zeros(DType.F64, outShape)
-    val outStrides = sums.strides
-    val n = size
-    val idx = new Array[Int](ndim)
-    var flat = 0L
-    while (flat < n) {
-      var outFlat = 0L
-      var k = 0
-      while (k < keep.length) { outFlat += idx(keep(k)) * outStrides(k); k += 1 }
-      val v = getDouble(flat)
-      if (!skipna || !v.isNaN) {
-        var w = 1.0
-        var a = 0
-        while (a < axes.length) {
-          if (axisWeights(a) != null) w *= axisWeights(a)(idx(axes(a)))
-          a += 1
-        }
-        sums.setDouble(outFlat, sums.getDouble(outFlat) + w * v)
-        wsums.setDouble(outFlat, wsums.getDouble(outFlat) + w)
-      }
-      var d = ndim - 1
-      var carry = true
-      while (d >= 0 && carry) {
-        idx(d) += 1
-        if (idx(d) == shape(d)) { idx(d) = 0; d -= 1 } else carry = false
-      }
-      flat += 1
-    }
+    val (sums, _, wsums) = weightedMoments(axes, axisWeights, skipna)
     (sums, wsums)
   }
 
@@ -329,34 +318,22 @@ final case class NdArray(dtype: DType, shape: Array[Int], data: Array[Byte])
     * float64 — the per-chunk partial for variance/std (exact for
     * integer-valued data: both moments stay within 2^53). */
   def sumSqCount(axes: Array[Int], skipna: Boolean): (NdArray, NdArray, NdArray) = {
-    val keep = Array.range(0, ndim).filterNot(axes.contains)
-    val outShape = keep.map(shape)
-    val sums = NdArray.zeros(DType.F64, outShape)
-    val sqs = NdArray.zeros(DType.F64, outShape)
-    val counts = NdArray.zeros(DType.F64, outShape)
-    val n = size
-    val outStrides = sums.strides
-    val idx = new Array[Int](ndim)
-    var flat = 0L
-    while (flat < n) {
-      var outFlat = 0L
-      var k = 0
-      while (k < keep.length) { outFlat += idx(keep(k)) * outStrides(k); k += 1 }
-      val v = getDouble(flat)
-      if (!skipna || !v.isNaN) {
-        sums.setDouble(outFlat, sums.getDouble(outFlat) + v)
-        sqs.setDouble(outFlat, sqs.getDouble(outFlat) + v * v)
-        counts.setDouble(outFlat, counts.getDouble(outFlat) + 1.0)
+    val w = new NdArray.RowWalk(this, axes)
+    val sums = new Array[Double](w.outSize)
+    val sqs = new Array[Double](w.outSize)
+    val counts = new Array[Double](w.outSize)
+    while (w.next()) {
+      val v = w.v
+      var o = w.out
+      var j = 0
+      while (j < w.n) {
+        val x = v(j)
+        if (!skipna || !x.isNaN) { sums(o) += x; sqs(o) += x * x; counts(o) += 1.0 }
+        o += w.step
+        j += 1
       }
-      var d = ndim - 1
-      var carry = true
-      while (d >= 0 && carry) {
-        idx(d) += 1
-        if (idx(d) == shape(d)) { idx(d) = 0; d -= 1 } else carry = false
-      }
-      flat += 1
     }
-    (sums, sqs, counts)
+    (w.result(sums), w.result(sqs), w.result(counts))
   }
 
   /** Joint moments of this array (x) and `other` (y) along the given
@@ -370,36 +347,27 @@ final case class NdArray(dtype: DType, shape: Array[Int], data: Array[Byte])
                   skipna: Boolean): Array[NdArray] = {
     require(java.util.Arrays.equals(shape, other.shape),
       s"pairMoments needs equal shapes, got ${shape.toSeq} vs ${other.shape.toSeq}")
-    val keep = Array.range(0, ndim).filterNot(axes.contains)
-    val outShape = keep.map(shape)
-    val out = Array.fill(6)(NdArray.zeros(DType.F64, outShape))
-    val outStrides = out(0).strides
-    val n = size
-    val idx = new Array[Int](ndim)
-    var flat = 0L
-    while (flat < n) {
-      var outFlat = 0L
-      var k = 0
-      while (k < keep.length) { outFlat += idx(keep(k)) * outStrides(k); k += 1 }
-      val x = getDouble(flat)
-      val y = other.getDouble(flat)
-      if (!skipna || (!x.isNaN && !y.isNaN)) {
-        out(0).setDouble(outFlat, out(0).getDouble(outFlat) + 1.0)
-        out(1).setDouble(outFlat, out(1).getDouble(outFlat) + x)
-        out(2).setDouble(outFlat, out(2).getDouble(outFlat) + y)
-        out(3).setDouble(outFlat, out(3).getDouble(outFlat) + x * y)
-        out(4).setDouble(outFlat, out(4).getDouble(outFlat) + x * x)
-        out(5).setDouble(outFlat, out(5).getDouble(outFlat) + y * y)
+    val w = new NdArray.RowWalk(this, axes)
+    val m = Array.fill(6)(new Array[Double](w.outSize))
+    val (cnt, sx, sy, sxy, sxx, syy) = (m(0), m(1), m(2), m(3), m(4), m(5))
+    val y = new Array[Double](w.n)
+    while (w.next()) {
+      other.readDoubles(w.in, w.n, y)
+      val v = w.v
+      var o = w.out
+      var j = 0
+      while (j < w.n) {
+        val xj = v(j)
+        val yj = y(j)
+        if (!skipna || (!xj.isNaN && !yj.isNaN)) {
+          cnt(o) += 1.0; sx(o) += xj; sy(o) += yj
+          sxy(o) += xj * yj; sxx(o) += xj * xj; syy(o) += yj * yj
+        }
+        o += w.step
+        j += 1
       }
-      var d = ndim - 1
-      var carry = true
-      while (d >= 0 && carry) {
-        idx(d) += 1
-        if (idx(d) == shape(d)) { idx(d) = 0; d -= 1 } else carry = false
-      }
-      flat += 1
     }
-    out
+    m.map(w.result)
   }
 
   /** Weighted first and second moments along the given axes, in
@@ -416,84 +384,54 @@ final case class NdArray(dtype: DType, shape: Array[Int], data: Array[Byte])
       require(w == null || w.length == shape(ax),
         s"weights for axis $ax have length ${w.length}, extent is ${shape(ax)}")
     }
-    val keep = Array.range(0, ndim).filterNot(axes.contains)
-    val outShape = keep.map(shape)
-    val sums = NdArray.zeros(DType.F64, outShape)
-    val sqs = NdArray.zeros(DType.F64, outShape)
-    val wsums = NdArray.zeros(DType.F64, outShape)
-    val outStrides = sums.strides
-    val n = size
-    val idx = new Array[Int](ndim)
-    var flat = 0L
-    while (flat < n) {
-      var outFlat = 0L
-      var k = 0
-      while (k < keep.length) { outFlat += idx(keep(k)) * outStrides(k); k += 1 }
-      val v = getDouble(flat)
-      if (!skipna || !v.isNaN) {
-        var w = 1.0
-        var a = 0
-        while (a < axes.length) {
-          if (axisWeights(a) != null) w *= axisWeights(a)(idx(axes(a)))
-          a += 1
+    val w = new NdArray.RowWalk(this, axes)
+    val sums = new Array[Double](w.outSize)
+    val sqs = new Array[Double](w.outSize)
+    val wsums = new Array[Double](w.outSize)
+    val wt = new Array[Double](w.n)
+    while (w.next()) {
+      w.weights(axisWeights, wt)
+      val v = w.v
+      var o = w.out
+      var j = 0
+      while (j < w.n) {
+        val x = v(j)
+        if (!skipna || !x.isNaN) {
+          sums(o) += wt(j) * x; sqs(o) += wt(j) * x * x; wsums(o) += wt(j)
         }
-        sums.setDouble(outFlat, sums.getDouble(outFlat) + w * v)
-        sqs.setDouble(outFlat, sqs.getDouble(outFlat) + w * v * v)
-        wsums.setDouble(outFlat, wsums.getDouble(outFlat) + w)
+        o += w.step
+        j += 1
       }
-      var d = ndim - 1
-      var carry = true
-      while (d >= 0 && carry) {
-        idx(d) += 1
-        if (idx(d) == shape(d)) { idx(d) = 0; d -= 1 } else carry = false
-      }
-      flat += 1
     }
-    (sums, sqs, wsums)
+    (w.result(sums), w.result(sqs), w.result(wsums))
   }
 
   /** Min or max along the given axes in float64, NaN-aware: with skipna
     * NaN inputs are ignored (all-NaN → NaN); without it any NaN poisons
     * its output cell — xarray's min/max semantics. */
   def extreme(axes: Array[Int], skipna: Boolean, isMin: Boolean): NdArray = {
-    val keep = Array.range(0, ndim).filterNot(axes.contains)
-    val outShape = keep.map(shape)
-    val out = NdArray.fill(DType.F64, outShape, Double.NaN)
-    val seen = new Array[Boolean](out.size.toInt)
-    val poisoned = new Array[Boolean](out.size.toInt)
-    val n = size
-    val outStrides = out.strides
-    val idx = new Array[Int](ndim)
-    var flat = 0L
-    while (flat < n) {
-      var outFlat = 0L
-      var k = 0
-      while (k < keep.length) { outFlat += idx(keep(k)) * outStrides(k); k += 1 }
-      val v = getDouble(flat)
-      val o = outFlat.toInt
-      if (v.isNaN) { if (!skipna) poisoned(o) = true }
-      else if (!poisoned(o)) {
-        val cur = out.getDouble(outFlat)
-        if (!seen(o) || (if (isMin) v < cur else v > cur))
-          out.setDouble(outFlat, v)
-        seen(o) = true
-      }
-      var d = ndim - 1
-      var carry = true
-      while (d >= 0 && carry) {
-        idx(d) += 1
-        if (idx(d) == shape(d)) { idx(d) = 0; d -= 1 } else carry = false
-      }
-      flat += 1
-    }
-    if (!skipna) {
-      var i = 0
-      while (i < poisoned.length) {
-        if (poisoned(i)) out.setDouble(i.toLong, Double.NaN)
-        i += 1
+    val w = new NdArray.RowWalk(this, axes)
+    val out = Array.fill(w.outSize)(Double.NaN)
+    val seen = new Array[Boolean](w.outSize)
+    val poisoned = new Array[Boolean](w.outSize)
+    while (w.next()) {
+      val v = w.v
+      var o = w.out
+      var j = 0
+      while (j < w.n) {
+        val x = v(j)
+        if (x.isNaN) { if (!skipna) poisoned(o) = true }
+        else if (!poisoned(o)) {
+          if (!seen(o) || (if (isMin) x < out(o) else x > out(o))) out(o) = x
+          seen(o) = true
+        }
+        o += w.step
+        j += 1
       }
     }
-    out
+    var i = 0
+    while (i < out.length) { if (poisoned(i)) out(i) = Double.NaN; i += 1 }
+    w.result(out)
   }
 
   /** Average-tie ranks along `axis` (xarray `Dataset.rank(dim)`,
@@ -758,37 +696,24 @@ final case class NdArray(dtype: DType, shape: Array[Int], data: Array[Byte])
     require(Set("linear", "lower", "higher", "nearest", "midpoint")(method),
       s"unknown quantile method $method " +
         "(linear, lower, higher, nearest, midpoint)")
-    val keep = Array.range(0, ndim).filterNot(axes.contains)
-    val outShape = keep.map(shape)
-    val outs = qs.map(_ => NdArray.zeros(DType.F64, outShape))
-    val out = outs.head // strides/size template
+    val w = new NdArray.RowWalk(this, axes)
+    val outs = qs.map(_ => NdArray.zeros(DType.F64, w.outShape))
     val redLen = axes.map(shape).product
     val buf = new Array[Double](math.max(redLen, 1))
-    val lens = new Array[Int](out.size.toInt)
-    val cells = Array.fill(out.size.toInt)(null: Array[Double])
-    var o = 0
-    while (o < cells.length) { cells(o) = new Array[Double](math.max(redLen, 1)); o += 1 }
-    val n = size
-    val outStrides = out.strides
-    val idx = new Array[Int](ndim)
+    val lens = new Array[Int](w.outSize)
+    val cells = Array.fill(w.outSize)(new Array[Double](math.max(redLen, 1)))
     var poisonedAny = false
-    val poisoned = new Array[Boolean](out.size.toInt)
-    var flat = 0L
-    while (flat < n) {
-      var outFlat = 0L
-      var k = 0
-      while (k < keep.length) { outFlat += idx(keep(k)) * outStrides(k); k += 1 }
-      val oI = outFlat.toInt
-      val v = getDouble(flat)
-      if (v.isNaN) { if (!skipna) { poisoned(oI) = true; poisonedAny = true } }
-      else { cells(oI)(lens(oI)) = v; lens(oI) += 1 }
-      var d = ndim - 1
-      var carry = true
-      while (d >= 0 && carry) {
-        idx(d) += 1
-        if (idx(d) == shape(d)) { idx(d) = 0; d -= 1 } else carry = false
+    val poisoned = new Array[Boolean](w.outSize)
+    while (w.next()) {
+      var o = w.out
+      var j = 0
+      while (j < w.n) {
+        val v = w.v(j)
+        if (v.isNaN) { if (!skipna) { poisoned(o) = true; poisonedAny = true } }
+        else { cells(o)(lens(o)) = v; lens(o) += 1 }
+        o += w.step
+        j += 1
       }
-      flat += 1
     }
     var i = 0
     while (i < cells.length) {
@@ -839,40 +764,26 @@ final case class NdArray(dtype: DType, shape: Array[Int], data: Array[Byte])
       require(w.length == shape(ax),
         s"weight vector length ${w.length} != axis extent ${shape(ax)}")
     }
-    val keep = Array.range(0, ndim).filterNot(axes.contains)
-    val out = NdArray.zeros(DType.F64, keep.map(shape))
+    val w = new NdArray.RowWalk(this, axes)
+    val out = NdArray.zeros(DType.F64, w.outShape)
     val redLen = axes.map(shape).product
-    val lens = new Array[Int](out.size.toInt)
-    val vcell = Array.fill(out.size.toInt)(new Array[Double](math.max(redLen, 1)))
-    val wcell = Array.fill(out.size.toInt)(new Array[Double](math.max(redLen, 1)))
-    val n = size
-    val outStrides = out.strides
-    val idx = new Array[Int](ndim)
+    val lens = new Array[Int](w.outSize)
+    val vcell = Array.fill(w.outSize)(new Array[Double](math.max(redLen, 1)))
+    val wcell = Array.fill(w.outSize)(new Array[Double](math.max(redLen, 1)))
     var poisonedAny = false
-    val poisoned = new Array[Boolean](out.size.toInt)
-    var flat = 0L
-    while (flat < n) {
-      var outFlat = 0L
-      var k = 0
-      while (k < keep.length) { outFlat += idx(keep(k)) * outStrides(k); k += 1 }
-      val oI = outFlat.toInt
-      val v = getDouble(flat)
-      if (v.isNaN) { if (!skipna) { poisoned(oI) = true; poisonedAny = true } }
-      else {
-        var w = 1.0
-        var a = 0
-        while (a < axes.length) { w *= axisWeights(a)(idx(axes(a))); a += 1 }
-        vcell(oI)(lens(oI)) = v
-        wcell(oI)(lens(oI)) = w
-        lens(oI) += 1
+    val poisoned = new Array[Boolean](w.outSize)
+    val wt = new Array[Double](w.n)
+    while (w.next()) {
+      w.weights(axisWeights, wt)
+      var o = w.out
+      var j = 0
+      while (j < w.n) {
+        val v = w.v(j)
+        if (v.isNaN) { if (!skipna) { poisoned(o) = true; poisonedAny = true } }
+        else { vcell(o)(lens(o)) = v; wcell(o)(lens(o)) = wt(j); lens(o) += 1 }
+        o += w.step
+        j += 1
       }
-      var d = ndim - 1
-      var carry = true
-      while (d >= 0 && carry) {
-        idx(d) += 1
-        if (idx(d) == shape(d)) { idx(d) = 0; d -= 1 } else carry = false
-      }
-      flat += 1
     }
     var i = 0
     while (i < vcell.length) {
@@ -907,43 +818,30 @@ final case class NdArray(dtype: DType, shape: Array[Int], data: Array[Byte])
     * lowest index. skipna ignores NaN cells (all-NaN → value NaN,
     * index -1); without it any NaN poisons the cell the same way. */
   def argExtreme(axis: Int, isMin: Boolean, skipna: Boolean): (NdArray, NdArray) = {
-    val keep = Array.range(0, ndim).filterNot(_ == axis)
-    val outShape = keep.map(shape)
-    val vals = NdArray.fill(DType.F64, outShape, Double.NaN)
-    val idxs = NdArray.fill(DType.F64, outShape, -1.0)
-    val poisoned = new Array[Boolean](vals.size.toInt)
-    val outStrides = vals.strides
-    val n = size
-    val idx = new Array[Int](ndim)
-    var flat = 0L
-    while (flat < n) {
-      var outFlat = 0L
-      var k = 0
-      while (k < keep.length) { outFlat += idx(keep(k)) * outStrides(k); k += 1 }
-      val o = outFlat.toInt
-      val v = getDouble(flat)
-      if (v.isNaN) { if (!skipna) poisoned(o) = true }
-      else if (!poisoned(o)) {
-        val cur = vals.getDouble(outFlat)
-        if (cur.isNaN || (if (isMin) v < cur else v > cur)) {
-          vals.setDouble(outFlat, v)
-          idxs.setDouble(outFlat, idx(axis).toDouble)
+    val w = new NdArray.RowWalk(this, Array(axis))
+    val vals = Array.fill(w.outSize)(Double.NaN)
+    val idxs = Array.fill(w.outSize)(-1.0)
+    val poisoned = new Array[Boolean](w.outSize)
+    while (w.next()) {
+      var o = w.out
+      var j = 0
+      while (j < w.n) {
+        val v = w.v(j)
+        if (v.isNaN) { if (!skipna) poisoned(o) = true }
+        else if (!poisoned(o) && (vals(o).isNaN || (if (isMin) v < vals(o) else v > vals(o)))) {
+          vals(o) = v
+          idxs(o) = (if (axis == ndim - 1) j else w.idx(axis)).toDouble
         }
+        o += w.step
+        j += 1
       }
-      var d = ndim - 1
-      var carry = true
-      while (d >= 0 && carry) {
-        idx(d) += 1
-        if (idx(d) == shape(d)) { idx(d) = 0; d -= 1 } else carry = false
-      }
-      flat += 1
     }
     var i = 0
     while (i < poisoned.length) {
-      if (poisoned(i)) { vals.setDouble(i.toLong, Double.NaN); idxs.setDouble(i.toLong, -1.0) }
+      if (poisoned(i)) { vals(i) = Double.NaN; idxs(i) = -1.0 }
       i += 1
     }
-    (vals, idxs)
+    (w.result(vals), w.result(idxs))
   }
 
   /** Block-aggregate downsample (xarray `coarsen`): each output cell
@@ -1536,26 +1434,23 @@ final case class NdArray(dtype: DType, shape: Array[Int], data: Array[Byte])
   /** Elementwise binary op in float64, returning F64. */
   def zipF64(other: NdArray)(f: (Double, Double) => Double): NdArray = {
     require(shape.sameElements(other.shape), "shape mismatch")
-    val out = NdArray.zeros(DType.F64, shape)
-    var i = 0L
-    while (i < size) {
-      out.setDouble(i, f(getDouble(i), other.getDouble(i)))
-      i += 1
-    }
-    out
+    val x = toDoubles
+    val y = other.toDoubles
+    var i = 0
+    while (i < x.length) { x(i) = f(x(i), y(i)); i += 1 }
+    NdArray.fromDoubles(DType.F64, shape, x)
   }
 
   def mapF64(f: Double => Double): NdArray = {
-    val out = NdArray.zeros(DType.F64, shape)
-    var i = 0L
-    while (i < size) { out.setDouble(i, f(getDouble(i))); i += 1 }
-    out
+    val x = toDoubles
+    var i = 0
+    while (i < x.length) { x(i) = f(x(i)); i += 1 }
+    NdArray.fromDoubles(DType.F64, shape, x)
   }
 
   def toDoubles: Array[Double] = {
     val out = new Array[Double](size.toInt)
-    var i = 0
-    while (i < out.length) { out(i) = getDouble(i); i += 1 }
+    readDoubles(0, out.length, out)
     out
   }
 
@@ -2530,6 +2425,88 @@ final case class NdArray(dtype: DType, shape: Array[Int], data: Array[Byte])
 }
 
 object NdArray {
+  // Typed little-endian views of the byte buffer. Call them with a type
+  // ascription, `(F32V.get(data, off): Float)`: that compiles to the
+  // exact `([BI)F` descriptor, where `.asInstanceOf[Float]` would
+  // compile to `([BI)Ljava/lang/Object;` and take the slow generic path.
+  private val F32V = MethodHandles.byteArrayViewVarHandle(classOf[Array[Float]], ByteOrder.LITTLE_ENDIAN)
+  private val F64V = MethodHandles.byteArrayViewVarHandle(classOf[Array[Double]], ByteOrder.LITTLE_ENDIAN)
+  private val I16V = MethodHandles.byteArrayViewVarHandle(classOf[Array[Short]], ByteOrder.LITTLE_ENDIAN)
+  private val I32V = MethodHandles.byteArrayViewVarHandle(classOf[Array[Int]], ByteOrder.LITTLE_ENDIAN)
+  private val I64V = MethodHandles.byteArrayViewVarHandle(classOf[Array[Long]], ByteOrder.LITTLE_ENDIAN)
+
+  /** The C-order walk shared by the axis reductions. Each `next()`
+    * moves to the next innermost-axis run of `a` and decodes it into
+    * `v` as float64: `n` elements starting at flat index `in`, the
+    * outer-axis position in `idx` (its last entry stays 0). Element j
+    * of the run belongs to output cell `out + j * step`, where `step`
+    * is 0 when the last axis is reduced and 1 when it is kept, so a
+    * kernel visits every output cell's inputs in the same C order as an
+    * element-at-a-time odometer and its float64 sums are bit-identical
+    * to one. */
+  private final class RowWalk(a: NdArray, axes: Array[Int]) {
+    private val nd = a.ndim
+    val outShape: Array[Int] = Array.range(0, nd).filterNot(axes.contains).map(a.shape)
+    val outSize: Int = Math.toIntExact(outShape.foldLeft(1L)(_ * _))
+    // output stride per input axis: 0 on a reduced axis
+    private val outStride: Array[Int] = {
+      val st = new Array[Int](nd)
+      var acc = 1
+      var d = nd - 1
+      while (d >= 0) {
+        if (!axes.contains(d)) { st(d) = acc; acc *= a.shape(d) }
+        d -= 1
+      }
+      st
+    }
+    val n: Int = if (nd == 0) 1 else a.shape(nd - 1)
+    val step: Int = if (nd == 0) 0 else outStride(nd - 1)
+    val v = new Array[Double](n)
+    val idx = new Array[Int](nd)
+    var in: Int = -n
+    var out: Int = 0
+    private var runsLeft: Long = if (n == 0) 0L else a.size / n
+
+    def next(): Boolean = runsLeft > 0 && {
+      if (in >= 0) { // advance the odometer over the outer axes
+        var k = nd - 2
+        var carry = true
+        while (k >= 0 && carry) {
+          idx(k) += 1
+          if (idx(k) == a.shape(k)) { idx(k) = 0; k -= 1 } else carry = false
+        }
+      }
+      in += n
+      out = 0
+      var d = 0
+      while (d < nd - 1) { out += idx(d) * outStride(d); d += 1 }
+      a.readDoubles(in, n, v)
+      runsLeft -= 1
+      true
+    }
+
+    /** Element weights of the current run into dst(0 until n): the
+      * product, in `axes` order, of `axisWeights(i)` at the element's
+      * position on `axes(i)` (null = weight 1). */
+    def weights(axisWeights: Array[Array[Double]], dst: Array[Double]): Unit = {
+      var j = 0
+      while (j < n) {
+        var wt = 1.0
+        var i = 0
+        while (i < axes.length) {
+          val aw = axisWeights(i)
+          if (aw != null) wt *= aw(if (axes(i) == nd - 1) j else idx(axes(i)))
+          i += 1
+        }
+        dst(j) = wt
+        j += 1
+      }
+    }
+
+    /** Accumulators shaped as the kept axes, as an F64 array. */
+    def result(acc: Array[Double]): NdArray = fromDoubles(DType.F64, outShape, acc)
+  }
+
   /** Levenberg–Marquardt solve of y ≈ a·exp(b·t) over the first `m`
     * entries of (t, y) — the [[curvefitExpAlong]] per-lane core. Seed:
     * the closed-form log-linear OLS over positive y (ln y = ln a + b·t);
@@ -2871,18 +2848,25 @@ object NdArray {
     NdArray(dtype, shape.clone(), new Array[Byte](n.toInt))
   }
 
+  /** `value` in every element: encoded once, then doubled by block copies. */
   def fill(dtype: DType, shape: Array[Int], value: Double): NdArray = {
     val a = zeros(dtype, shape)
-    var i = 0L
-    while (i < a.size) { a.setDouble(i, value); i += 1 }
+    if (a.data.nonEmpty) {
+      a.setDouble(0, value)
+      var filled = dtype.itemsize
+      while (filled < a.data.length) {
+        val len = math.min(filled, a.data.length - filled)
+        System.arraycopy(a.data, 0, a.data, filled, len)
+        filled += len
+      }
+    }
     a
   }
 
   def fromDoubles(dtype: DType, shape: Array[Int], values: Array[Double]): NdArray = {
     val a = zeros(dtype, shape)
     require(a.size == values.length)
-    var i = 0
-    while (i < values.length) { a.setDouble(i, values(i)); i += 1 }
+    a.writeDoubles(0, values.length, values)
     a
   }
 

@@ -70,6 +70,30 @@ object StreamOps {
         (h0us, (b.getLong(1) - h0us) / 3600000000L + 1)
       })
 
+  /** Moves span k's parquet part file from `tmp/span=k` to
+    * `scratch/batch<k>.parquet` for k in [0, spans), skipping spans with
+    * no directory, and gives the moved files strictly increasing mtimes.
+    * One write job makes every span file at about the same time, and the
+    * file source admits files in mtime order under maxFilesPerTrigger=1,
+    * so the pinned mtimes make "micro-batch k reads span k" explicit
+    * instead of a tie-break. */
+  private[streaming] def placeSpanFiles(tmp: java.nio.file.Path,
+                                        scratch: java.nio.file.Path, spans: Int): Unit = {
+    import scala.jdk.CollectionConverters._
+    val t0 = System.currentTimeMillis() - 60000L
+    (0 until spans).foreach { k =>
+      val d = tmp.resolve(s"span=$k")
+      if (java.nio.file.Files.isDirectory(d)) {
+        val f = java.nio.file.Files.list(d).iterator().asScala
+          .find(_.toString.endsWith(".parquet")).get
+        val dst = scratch.resolve(s"batch$k.parquet")
+        java.nio.file.Files.move(f, dst)
+        java.nio.file.Files.setLastModifiedTime(dst,
+          java.nio.file.attribute.FileTime.fromMillis(t0 + k * 2000L))
+      }
+    }
+  }
+
   private def eventsStream(s: SparkSession, dir: String): DataFrame = {
     val path = s"$dir/events.parquet"
     val rawType = graft.queries.Tables.eventsTsType(s, path)
@@ -517,15 +541,9 @@ object StreamOps {
             .withColumn("span", col("part"))
             .repartition(4, col("span"))
             .write.mode("overwrite").partitionBy("span").parquet(tmp.toString)
-          import scala.jdk.CollectionConverters._
           (0 until 4).foreach { k =>
             val d = tmp.resolve(s"span=$k")
-            val dst = scratch.resolve(s"batch$k.parquet")
-            if (java.nio.file.Files.isDirectory(d)) {
-              val f = java.nio.file.Files.list(d).iterator().asScala
-                .find(_.toString.endsWith(".parquet")).get
-              java.nio.file.Files.move(f, dst)
-            } else {
+            if (!java.nio.file.Files.isDirectory(d)) {
               // an all-empty span must still ship a (zero-row) batch file
               // or every later span's micro-batch id would shift off its
               // source part (latent at sparser scale factors)
@@ -535,18 +553,9 @@ object StreamOps {
                   StructField("value", DoubleType),
                   StructField("part", LongType))))
                 .coalesce(1).write.mode("overwrite").parquet(d.toString)
-              val f = java.nio.file.Files.list(d).iterator().asScala
-                .find(_.toString.endsWith(".parquet")).get
-              java.nio.file.Files.move(f, dst)
             }
-            // one write job produced every span file with the same
-            // mtime; the file source admits files in timestamp order, so
-            // pin a strictly increasing mtime to make the name<->batch
-            // mapping (which the provenance require checks) explicit
-            java.nio.file.Files.setLastModifiedTime(dst,
-              java.nio.file.attribute.FileTime.fromMillis(
-                System.currentTimeMillis() - 60000L + k * 2000L))
           }
+          placeSpanFiles(tmp, scratch, 4)
           graft.core.Fs.deleteRecursively(tmp.toString)
         }
         // eager store setup: metadata + template only, zero chunk writes
@@ -688,15 +697,7 @@ object StreamOps {
           val tmp = scratch.resolve("_spans")
           dense.repartition(4, col("span"))
             .write.mode("overwrite").partitionBy("span").parquet(tmp.toString)
-          import scala.jdk.CollectionConverters._
-          (0 until 4).foreach { k =>
-            val d = tmp.resolve(s"span=$k")
-            if (java.nio.file.Files.isDirectory(d)) {
-              val f = java.nio.file.Files.list(d).iterator().asScala
-                .find(_.toString.endsWith(".parquet")).get
-              java.nio.file.Files.move(f, scratch.resolve(s"batch$k.parquet"))
-            }
-          }
+          placeSpanFiles(tmp, scratch, 4)
           graft.core.Fs.deleteRecursively(tmp.toString)
         }
         // eager template setup, zero chunk writes
@@ -793,15 +794,7 @@ object StreamOps {
             .select(col("ts"), col("value"), col("span"))
             .repartition(4, col("span"))
             .write.mode("overwrite").partitionBy("span").parquet(tmp.toString)
-          import scala.jdk.CollectionConverters._
-          (0 until 4).foreach { k =>
-            val d = tmp.resolve(s"span=$k")
-            if (java.nio.file.Files.isDirectory(d)) {
-              val f = java.nio.file.Files.list(d).iterator().asScala
-                .find(_.toString.endsWith(".parquet")).get
-              java.nio.file.Files.move(f, scratch.resolve(s"batch$k.parquet"))
-            }
-          }
+          placeSpanFiles(tmp, scratch, 4)
           graft.core.Fs.deleteRecursively(tmp)
         }
         // zero-initialized accumulator store, METADATA-ONLY: the

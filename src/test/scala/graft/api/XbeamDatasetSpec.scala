@@ -1886,6 +1886,24 @@ class XbeamDatasetSpec extends AnyFunSuite {
     assert(c.vars("v").arr.sameAs(arange(DType.F64, 4, 3)))
   }
 
+  test("tabular bridge: the plan-time chunk-size guard is overflow-checked") {
+    import spark.implicits._
+    val df = Seq((0L, 0L, 0L, 1.0)).toDF("x", "y", "z", "v")
+    val dims = Seq("x" -> (1L << 21), "y" -> (1L << 21), "z" -> (1L << 21))
+    // 2^63 cells: the unchecked Long product wrapped to a size the guard passed
+    val e = intercept[IllegalArgumentException] {
+      TabularBridge.fromDataFrame(df, spark, dims, Seq("v" -> DType.F64),
+        Map("x" -> (1 << 21), "y" -> (1 << 21), "z" -> (1 << 21)))
+    }
+    assert(e.getMessage.contains("over 2^63 B"), e.getMessage)
+    // 2^26 cells: 16 B each (8 B per field) fits in 2 GB, but each cell
+    // of one variable takes 32 B in the aggregation buffer
+    intercept[IllegalArgumentException] {
+      TabularBridge.fromDataFrame(df, spark, dims.take(1) ++ Seq("y" -> 32L, "z" -> 1L),
+        Seq("v" -> DType.F64), Map("x" -> (1 << 21), "y" -> 32, "z" -> 1))
+    }
+  }
+
   test("tabular bridge preserves int64 beyond 2^53 (hash-derived ids)") {
     import spark.implicits._
     // values a double cannot hold exactly: Long.MaxValue - k is ~2^63
